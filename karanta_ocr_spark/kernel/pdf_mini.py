@@ -82,6 +82,8 @@ _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
+_REF_TAIL_RE = re.compile(rb"\s+(\d+)\s+R\b")
+_NAME_HEX_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
 
 
 class _Lexer:
@@ -143,8 +145,8 @@ class _Lexer:
         while self.i < self.n and self.d[self.i] not in _WS and self.d[self.i] not in _DELIM:
             self.i += 1
         raw = self.d[start : self.i]
-        # #xx hex escapes in names
-        raw = re.sub(rb"#([0-9A-Fa-f]{2})", lambda m: bytes([int(m.group(1), 16)]), raw)
+        if b"#" in raw:  # #xx hex escapes in names
+            raw = _NAME_HEX_RE.sub(lambda m: bytes([int(m.group(1), 16)]), raw)
         return "/" + raw.decode("latin-1")
 
     _NUM_RE = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
@@ -159,7 +161,7 @@ class _Lexer:
         end = m.end()
         # Indirect reference lookahead: "<int> <int> R"
         if b"." not in tok:
-            m2 = re.compile(rb"\s+(\d+)\s+R\b").match(self.d, end)
+            m2 = _REF_TAIL_RE.match(self.d, end)
             if m2:
                 self.i = m2.end()
                 return Ref(int(tok), int(m2.group(1)))
@@ -946,18 +948,26 @@ def _decode_pdf_string(raw: bytes) -> str:
         return raw.decode("latin-1")
 
 
+#: One content-stream token per match, leading whitespace folded in:
+#: an escape-free literal string, a ``#``-free name, or a run of
+#: numbers together with the operator that ends it (either part may be
+#: absent). An empty match leaves the cursor on a token the ``_Lexer``
+#: parses (escaped or nested literal, hex string, dict, array, ``#xx``
+#: name), a comment, or a stray byte.
 _CONTENT_TOKEN = re.compile(
     rb"""
-      (?P<str>\()            # literal string start, handled by lexer
-    | (?P<hex><(?!<))        # hex string start
-    | (?P<dict><<)           # inline dict (e.g. BDC props)
-    | (?P<arr>\[)            # array start
-    | (?P<name>/[^\s()<>\[\]{}/%]*)
-    | (?P<num>[+-]?(?:\d+\.?\d*|\.\d+))
-    | (?P<op>[A-Za-z'"][A-Za-z0-9'"*]*)
+    [\x00\t\n\x0c\r ]*
+    (?:
+        \( (?P<lit>[^()\\]*) \)
+      | (?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%#]*) (?![^\x00\t\n\x0c\r ()<>\[\]{}/%])
+      | (?P<nums>(?:[+-]?(?:\d+\.?\d*|\.\d+)[\x00\t\n\x0c\r ]*)+)?
+        (?P<op>[A-Za-z'"][A-Za-z0-9'"*]*)?
+    )
     """,
     re.X,
 )
+#: Operand stack bound: a longer run without an operator is reset.
+_MAX_OPERANDS = 4096
 
 
 def _interpret_content(
@@ -993,51 +1003,65 @@ def _interpret_content(
             text = _decode_with_cmap(raw, cur_cmap)
         text_elements.append(TextElement(text, txt2user[4], txt2user[5]))
 
+    lex = _Lexer(content)
+    next_token = _CONTENT_TOKEN.match
+    numbers = _Lexer._NUM_RE.findall
     i, n = 0, len(content)
     while i < n:
-        c = content[i]
-        if len(operands) > 4096:
+        if len(operands) > _MAX_OPERANDS:
             # Corrupt stream accumulating operands without operators:
             # bail rather than grow unboundedly.
             operands = []
-        if c in _WS:
-            i += 1
-            continue
-        if c == 0x25:  # comment
-            j = content.find(b"\n", i)
-            i = n if j < 0 else j + 1
-            continue
-        lex = _Lexer(content, i)
-        if c == 0x28:  # (
-            operands.append(lex._literal_string())
+        m = next_token(content, i)
+        i = m.end()
+        kind = m.lastgroup
+        if kind is None:
+            if i >= n:
+                break
+            c = content[i]
+            if c == 0x25:  # comment
+                j = content.find(b"\n", i)
+                i = n if j < 0 else j + 1
+                continue
+            lex.i = i
+            if c == 0x28:  # (
+                operands.append(lex._literal_string())
+            elif c == 0x3C:  # <
+                if content[i + 1 : i + 2] == b"<":
+                    operands.append(lex._dict())
+                else:
+                    operands.append(lex._hex_string())
+            elif c == 0x5B:  # [
+                operands.append(lex._array())
+            elif c == 0x2F:  # /name
+                operands.append(lex._name())
+            else:
+                i += 1  # stray byte
+                continue
             i = max(lex.i, i + 1)  # guarantee progress on corrupt input
             continue
-        if content[i : i + 2] == b"<<":
-            operands.append(lex._dict())
-            i = max(lex.i, i + 1)
+        if kind == "lit":
+            operands.append(m.group("lit"))
             continue
-        if c == 0x3C:  # <
-            operands.append(lex._hex_string())
-            i = max(lex.i, i + 1)
+        if kind == "name":
+            operands.append(m.group("name").decode("latin-1"))
             continue
-        if c == 0x5B:  # [
-            operands.append(lex._array())
-            i = max(lex.i, i + 1)
-            continue
-        if c == 0x2F:  # /name
-            operands.append(lex._name())
-            i = max(lex.i, i + 1)
-            continue
-        m = _CONTENT_TOKEN.match(content, i)
-        if m is None:
-            i += 1
-            continue
-        i = m.end()
-        if m.lastgroup == "num":
-            tok = m.group(0)
-            operands.append(float(tok) if b"." in tok else int(tok))
-            continue
-        op = m.group(0)
+        run = m.group("nums")
+        if run is not None:
+            vals = [float(t) if b"." in t else int(t) for t in numbers(run)]
+            if len(operands) + len(vals) <= _MAX_OPERANDS:
+                operands += vals
+            else:
+                # The run crosses the cap: replay the reset token by token.
+                for v in vals:
+                    if len(operands) > _MAX_OPERANDS:
+                        operands = []
+                    operands.append(v)
+                if len(operands) > _MAX_OPERANDS:
+                    operands = []
+            if kind == "nums":
+                continue
+        op = m.group("op")
 
         # ---- operators -------------------------------------------------
         if op == b"ID":

@@ -64,9 +64,15 @@ _CC_DRIVER_EDGE_CAP = 250000
 
 
 def _cc_driver_edge_cap() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(_CC_DRIVER_EDGE_CAP))
-    )
+    raw = os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES")
+    if raw is None:
+        return _CC_DRIVER_EDGE_CAP
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CC_DRIVER_EDGES must be an integer edge count, got {raw!r}"
+        ) from None
 
 
 def _driver_components(sym_rows, id_type) -> tuple[list, StructType]:

@@ -1,5 +1,6 @@
 """Connected components + duplicate clusters."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from karanta_ocr_spark.operators.graph import (
@@ -174,6 +175,20 @@ def test_connected_components_driver_path_matches_loop(spark, monkeypatch):
         comps.setdefault(c, set()).add(node)
     assert set(comps) == {1, 100, 200, 300}
     assert comps[1] == set(range(1, 31))
+
+
+def test_cc_driver_edge_cap_env(monkeypatch):
+    # Unset -> the default cap; an integer is taken as is; anything
+    # else fails naming the variable and the bad value.
+    import karanta_ocr_spark.operators.graph as gm
+
+    monkeypatch.delenv("SPARK_GRAFT_CC_DRIVER_EDGES", raising=False)
+    assert gm._cc_driver_edge_cap() == gm._CC_DRIVER_EDGE_CAP
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "1234")
+    assert gm._cc_driver_edge_cap() == 1234
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "250k")
+    with pytest.raises(ValueError, match=r"SPARK_GRAFT_CC_DRIVER_EDGES.*'250k'"):
+        gm._cc_driver_edge_cap()
 
 
 def test_duplicate_clusters_anchor_contraction_paths(spark):

@@ -3,9 +3,12 @@ contract (north rule: "byte-identical extracted text per url"), plus
 scale-invariance (partition count must not change bytes) and the
 resume anti-join."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
+from karanta_ocr_spark.metrics import FAILURE_SAMPLE_N
 from karanta_ocr_spark.pipeline import (
     ExtractConfig,
     assemble_documents,
@@ -89,6 +92,53 @@ def test_lineage_metrics_table(spark, tmp_path):
     assert agg[1] >= 1  # the corrupt-PDF doc shows up as a failure
     sample = m.filter(F.size("failure_samples") > 0).collect()
     assert sample, "failure sample rows must be captured"
+
+    # Staged mode aggregates PAGE rows: a multi-page PDF puts several
+    # rows of one url in a partition, a duplicated input url must count
+    # once in rows_in and a null url not at all. Every partition's
+    # counters must equal a recount of the same page rows.
+    from karanta_ocr_spark.sources.web_pages import WEB_PAGES_SCHEMA
+
+    met_staged = str(tmp_path / "metrics_staged")
+    dup_url = "https://docs.example.org/dup.html"
+    extra = spark.createDataFrame(
+        [
+            (dup_url, None, b"<html><body><p>first copy of the page</p></body></html>", None, "eng"),
+            (dup_url, None, b"<html><body><p>second copy of the page</p></body></html>", None, "eng"),
+            (None, None, b"<html><body><p>a page without a url</p></body></html>", None, "eng"),
+        ],
+        schema=WEB_PAGES_SCHEMA,
+    ).coalesce(1)
+    web = web.coalesce(3).union(extra)
+    run_extraction(
+        spark, web, num_partitions=4, metrics_path=met_staged, mode="staged",
+        repartition_input=False,
+    )
+    pages = extract_pages(web).collect()
+    assert max(Counter((r["partition_id"], r["url"]) for r in pages).values()) > 1
+    assert any(r["url"] is None for r in pages)
+    want: dict = {}
+    for r in pages:
+        w = want.setdefault(
+            r["partition_id"], {"urls": set(), "ok": 0, "failed": 0, "errors": set()}
+        )
+        if r["url"] is not None:
+            w["urls"].add(r["url"])
+        if r["ok"]:
+            w["ok"] += 1
+        else:
+            w["failed"] += 1
+            w["errors"].add((r["url"], r["error"]))
+    got = {r["partition_id"]: r for r in spark.read.parquet(met_staged).collect()}
+    assert set(got) == set(want)
+    for pid, w in want.items():
+        row = got[pid]
+        assert row["rows_in"] == len(w["urls"]), pid
+        assert row["rows_ok"] == w["ok"], pid
+        assert row["rows_failed"] == w["failed"], pid
+        samples = row["failure_samples"]
+        assert len(samples) == min(FAILURE_SAMPLE_N, w["failed"]), pid
+        assert {(x["url"], x["error"]) for x in samples} <= w["errors"], pid
 
 
 def test_salting_balances_hot_domain(spark):
